@@ -15,25 +15,22 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
  */
 final case class Catalog(spark: SparkSession, location: String, catname: String) {
 
-  private lazy val meta: Map[String, String] = {
-    val raw = HipsCatalog.readString(spark, s"$location/$catname/${catname}_meta.json")
-    // flat string/number fields of the metadata JSON (hips map handled elsewhere)
-    """"(\w+)":\s*(?:"([^"]*)"|([-\d.]+))""".r.findAllMatchIn(raw).map { m =>
-      m.group(1) -> Option(m.group(2)).getOrElse(m.group(3))
-    }.toMap
-  }
+  private lazy val paths = CatalogFormat.Paths(location, catname)
 
-  def raKw: String = meta("ra_kw")
-  def decKw: String = meta("dec_kw")
-  def idKw: String = meta("id_kw")
-  def orderK: Int = meta("order_k").toInt
+  /** The catalog's `{cat}_meta.json`, read once per handle. */
+  lazy val meta: CatalogFormat.Meta = CatalogFormat.readMeta(spark, paths)
+
+  def raKw: String = meta.raKw
+  def decKw: String = meta.decKw
+  def idKw: String = meta.idKw
+  def orderK: Int = meta.orderK
 
   /** The order-k density histogram persisted at import ((pix, cnt),
    *  sparse — nonzero pixels only): the artifact behind the
    *  reference's visualize_sources view ({cat}_order10_hpmap.fits,
    *  lsd2_io.py:12). Read back, never recomputed. */
   def densityMap(): DataFrame =
-    spark.read.parquet(s"$location/$catname/point_map.parquet")
+    spark.read.parquet(paths.pointMap)
 
   /**
    * Persist the density map as the reference's healpy-ecosystem FITS
@@ -99,56 +96,57 @@ final case class Catalog(spark: SparkSession, location: String, catname: String)
       columns = withContractCols(columns))
 
   /**
+   * Compact every partition leaf of the catalog and its margin
+   * cache: incremental [[append]]s leave one file per append per
+   * pixel — the small-file tail that turns 100 TB scans into footer
+   * parsing. Walks the `Norder=K/Dir=D/Npix=P` leaves of the
+   * `catalog/` and `neighbor/` trees (nothing else under the catalog
+   * directory, such as resumable-import staging, is touched) and
+   * applies [[graft.operators.Layout.compact]]'s staged-swap rewrite
+   * to any leaf with more than one file (sorted by `_ID` within
+   * files, the import-time order), then refreshes the trees' cached
+   * listings and summary sidecars. The leaf walk is driver-side but
+   * bounded by the partition map (the same cardinality every catalog
+   * operation already lists); each leaf rewrite is its own small
+   * Spark job. Returns (leaves compacted, files before, files after).
+   */
+  def compact(targetFileBytes: Long = 128L * 1024 * 1024): (Int, Int, Int) = {
+    val fs = CatalogFormat.fs(spark, paths.base)
+    var (done, before, after) = (0, 0, 0)
+    for (tree <- CatalogFormat.Trees; (o, p) <- CatalogFormat.tiles(spark, paths.tree(tree))) {
+      val leaf = CatalogFormat.tilePath(paths.tree(tree), o, p)
+      val n = fs.listStatus(new org.apache.hadoop.fs.Path(leaf))
+        .count(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
+      before += n
+      if (n > 1) {
+        val (_, a) = graft.operators.Layout.compact(spark, leaf, targetFileBytes, sortCols = Seq("_ID"))
+        done += 1
+        after += a
+      } else after += n
+    }
+    if (done > 0) CatalogFormat.treesChanged(spark, paths)
+    (done, before, after)
+  }
+
+  /**
    * Incremental append: add rows to this catalog without
    * re-importing — frozen partition map, `_ID` ranks continued,
    * margins and density map folded in (see [[HipsPartitioner.append]]).
    * Columns must carry the catalog's ra/dec/id keywords.
    */
-  /**
-   * Compact every partition leaf of the catalog (and its margin
-   * cache): incremental [[append]]s leave one file per append per
-   * pixel — the small-file tail that turns 100 TB scans into footer
-   * parsing. Walks the `Norder=K/Dir=D/Npix=P` leaves and applies
-   * [[graft.operators.Layout.compact]]'s staged-swap rewrite to any
-   * leaf with more than one file (sorted by `_ID` within files, the
-   * import-time order). The leaf walk is driver-side but bounded by
-   * the partition map (the same cardinality every catalog operation
-   * already lists); each leaf rewrite is its own small Spark job.
-   * Returns (leaves compacted, files before, files after).
-   */
-  def compact(targetFileBytes: Long = 128L * 1024 * 1024): (Int, Int, Int) = {
-    val fs = new org.apache.hadoop.fs.Path(location)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def leaves(root: String): Seq[org.apache.hadoop.fs.Path] = {
-      val p = new org.apache.hadoop.fs.Path(root)
-      if (!fs.exists(p)) Nil
-      else {
-        val it = fs.listFiles(p, true)
-        val dirs = scala.collection.mutable.Set.empty[org.apache.hadoop.fs.Path]
-        while (it.hasNext) {
-          val f = it.next()
-          if (f.getPath.getName.endsWith(".parquet")) dirs += f.getPath.getParent
-        }
-        dirs.toSeq
-      }
-    }
-    var (done, before, after) = (0, 0, 0)
-    for (leaf <- leaves(s"$location/$catname") ++ leaves(s"$location/${catname}_neighbor")) {
-      val n = fs.listStatus(leaf).count(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-      before += n
-      if (n > 1) {
-        val (_, a) = graft.operators.Layout.compact(
-          spark, leaf.toString, targetFileBytes, sortCols = Seq("_ID"))
-        done += 1
-        after += a
-      } else after += n
-    }
-    (done, before, after)
-  }
-
   def append(df: DataFrame): Catalog = {
     HipsPartitioner.append(df, raKw, decKw, idKw, location, catname)
     this
+  }
+
+  /** Re-split pixels that outgrew the import threshold through
+   *  appends ([[HipsPartitioner.repartition]] — rewrites only the
+   *  over-threshold tiles, `_ID`s preserved, margins rebuilt, meta +
+   *  frozen layout basis refreshed). Returns a fresh handle (this
+   *  one's cached meta is stale after the rewrite). */
+  def repartition(exactMargin: Boolean = false): Catalog = {
+    HipsPartitioner.repartition(spark, location, catname, exactMargin)
+    Catalog(spark, location, catname)
   }
 
   /**
@@ -160,16 +158,6 @@ final case class Catalog(spark: SparkSession, location: String, catname: String)
    * `c1Cols`/`c2Cols` prune each side's scan before the join —
    * ra/dec/id are always kept (util.py:276).
    */
-  /** Re-split pixels that outgrew the import threshold through
-   *  appends ([[HipsPartitioner.repartition]] — rewrites only the
-   *  over-threshold tiles, `_ID`s preserved, margins rebuilt, meta +
-   *  frozen layout basis refreshed). Returns a fresh handle (this
-   *  one's cached meta is stale after the rewrite). */
-  def repartition(summaryFiles: Boolean = true, exactMargin: Boolean = false): Catalog = {
-    HipsPartitioner.repartition(spark, location, catname, summaryFiles, exactMargin)
-    Catalog(spark, location, catname)
-  }
-
   def crossMatch(other: Catalog, nNeighbors: Int = 1, dthreshDeg: Double = 0.01,
                  c1Cols: Seq[String] = Nil, c2Cols: Seq[String] = Nil,
                  delim: String = "."): DataFrame = {
@@ -212,10 +200,7 @@ final case class Catalog(spark: SparkSession, location: String, catname: String)
    *  the FROZEN import histogram, matching the directories on disk
    *  even after appends. */
   def visualizePartitions(width: Int = 800, height: Int = 400): java.awt.image.BufferedImage = {
-    val rows = spark.read.parquet(s"$location/$catname/import_hist.parquet").collect()
-    val pm = HipsPartitioner.partitionMapFromSparseHist(
-      rows.map(_.getLong(0)), rows.map(_.getLong(1)), orderK, meta("pix_threshold").toLong)
-    graft.viz.Mollweide.partitions(pm, width, height)
+    graft.viz.Mollweide.partitions(CatalogFormat.frozenMap(spark, paths, meta), width, height)
   }
 
   /** Density view with the cone's pixel cover painted at full scale —
@@ -268,7 +253,7 @@ object Catalog {
    * session-scoped — the standard Spark model), so one `open` covers
    * every subsequent read of that store. Every graft filesystem
    * access (metadata JSON, histograms, hive trees) already goes
-   * through the Hadoop FileSystem API (see HipsCatalog.fs), so cloud
+   * through the Hadoop FileSystem API (see [[CatalogFormat]]), so cloud
    * and local catalogs take the identical code path; the cloud
    * schemes themselves are untestable in this zero-egress sandbox.
    */
@@ -300,11 +285,11 @@ object Catalog {
                       spec: graft.sources.CatalogReader.CatalogSpec,
                       location: String, catname: String,
                       orderK: Int = 6, threshold: Long = 1000000L, marginDeg: Double = 0.1,
-                      batchFiles: Int = 16, cleanStaging: Boolean = false): Catalog = {
+                      batchFiles: Int = 16): Catalog = {
     val batches = paths.grouped(batchFiles).toSeq
     HipsPartitioner.writeResumable(spark, batches,
       files => graft.sources.CatalogReader.read(spark, files, spec),
-      "ra", "dec", "id", location, catname, orderK, threshold, marginDeg, cleanStaging)
+      "ra", "dec", "id", location, catname, orderK, threshold, marginDeg)
     Catalog(spark, location, catname)
   }
 }

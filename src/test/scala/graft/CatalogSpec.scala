@@ -1,6 +1,6 @@
 package graft
 
-import graft.catalog.{Catalog, HipsCatalog, HipsPartitioner}
+import graft.catalog.{Catalog, CatalogFormat, HipsCatalog, HipsPartitioner}
 import graft.functions.sphere
 import org.apache.spark.sql.functions._
 
@@ -701,6 +701,122 @@ class CatalogSpec extends SparkSpecBase {
     val cone1 = cat.coneSearch(180.0, 0.0, 30.0).select("k")
       .collect().map(_.getLong(0)).sorted.toSeq
     assert(cone1 == cone0 && cone1.nonEmpty, "pruned search parity after compaction")
+    // the summary sidecars were rewritten: they list the compacted
+    // files, not the deleted append tails
+    for (tree <- Seq("catalog", "neighbor")) {
+      val (nFiles, nRows, _) = summaryStats(s"$out/cc/$tree")
+      val partFiles = org.apache.commons.io.FileUtils
+        .listFiles(new java.io.File(s"$out/cc/$tree"), Array("parquet"), true).size()
+      assert(nRows == spark.read.parquet(s"$out/cc/$tree").count(), s"$tree: _metadata row total")
+      assert(nFiles == partFiles, s"$tree: _metadata covers $nFiles files, tree has $partFiles")
+    }
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(out))
+  }
+
+  test("meta codec: a 1-arcsecond margin and the layout fields survive import, append and repartition") {
+    val out = java.nio.file.Files.createTempDirectory("graft_meta").toString
+    val margin = 1.0 / 3600
+    val paths = CatalogFormat.Paths(out, "arc")
+    val expected = CatalogFormat.Meta("cra", "cdec", "k", threshold = 200L, orderK = 4, marginDeg = margin)
+    def check(step: String): Unit = {
+      assert(CatalogFormat.readMeta(spark, paths) == expected, s"$step: codec")
+      val cat = Catalog(spark, out, "arc")
+      assert(cat.meta == expected, s"$step: Catalog.meta")
+      assert((cat.raKw, cat.decKw, cat.idKw, cat.orderK) == (("cra", "cdec", "k", 4)), s"$step: accessors")
+    }
+    HipsPartitioner.write(li.filter(col("k") % 8 === 1), "cra", "cdec", "k", out, "arc",
+      orderK = 4, threshold = 200, marginDeg = margin)
+    // the margin is stored in exponent notation, the case a digits-only
+    // number pattern misreads
+    assert(new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(paths.meta)), "UTF-8")
+      .contains("E-4"))
+    check("import")
+    HipsPartitioner.append(li.filter(col("k") % 8 =!= 1), "cra", "cdec", "k", out, "arc")
+    check("append")
+    HipsPartitioner.repartition(spark, out, "arc")
+    // the commit re-froze import_hist to the grown counts, so the meta
+    // was rewritten by the repartition
+    assert(CatalogFormat.readHist(spark, paths.importHist)._2.sum == li.count())
+    check("repartition")
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(out))
+  }
+
+  test("catalog compaction walks only the hive trees: resumable-import staging is left alone") {
+    val out = java.nio.file.Files.createTempDirectory("graft_compactstage").toString
+    val srcDir = java.nio.file.Files.createTempDirectory("graft_compactstage_src").toString
+    val cust = spark.read.parquet(sf("sf0.001") + "/customer.parquet")
+      .withColumn("cra", sphere.raOf(col("c_custkey")))
+      .withColumn("cdec", sphere.decOf(col("c_custkey")))
+    (0 until 2).foreach { i =>
+      cust.filter(col("c_custkey") % 2 === i).coalesce(1)
+        .write.mode("overwrite").parquet(s"$srcDir/part$i")
+    }
+    // one batch of two source files: its staging leaf holds two part
+    // files without `_ID`, which a walk over the whole catalog dir
+    // would try to compact by `_ID`
+    HipsPartitioner.writeResumable(spark, Seq(Seq(s"$srcDir/part0", s"$srcDir/part1")),
+      files => spark.read.parquet(files: _*),
+      "cra", "cdec", "c_custkey", out, "rs", orderK = 2, threshold = 100, marginDeg = 5.0)
+    def stageFiles = new java.io.File(s"$out/rs/_import/stage/batch=0").listFiles()
+      .map(_.getName).filter(_.endsWith(".parquet")).sorted.toSeq
+    val staged = stageFiles
+    assert(staged.length > 1, "the batch must stage more than one file")
+    val cat = Catalog(spark, out, "rs")
+    val before = cat.load().orderBy("_ID").collect().toSeq
+    assert(cat.compact()._1 == 0, "a fresh import has one file per leaf")
+    assert(stageFiles == staged, "compaction must not touch the import staging")
+    assert(cat.load().orderBy("_ID").collect().toSeq == before)
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(out))
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(srcDir))
+  }
+
+  /** (Spark jobs started, shuffle exchanges in the executed plans of
+   *  write commands) while `body` runs. */
+  private def planShape(body: => Unit): (Int, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.command.DataWritingCommandExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val exchanges = new java.util.concurrent.atomic.AtomicInteger
+    val plans = new AdaptiveSparkPlanHelper {}
+    val jobListener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    val writeListener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        if (plans.collectFirst(qe.executedPlan) { case w: DataWritingCommandExec => w }.isDefined)
+          exchanges.addAndGet(plans.collectWithSubqueries(qe.executedPlan) {
+            case e: ShuffleExchangeLike => e }.size)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    val sc = spark.sparkContext
+    org.apache.spark.graft.ListenerBus.drain(sc)
+    sc.addSparkListener(jobListener)
+    spark.listenerManager.register(writeListener)
+    try body
+    finally {
+      org.apache.spark.graft.ListenerBus.drain(sc)
+      sc.removeSparkListener(jobListener)
+      spark.listenerManager.unregister(writeListener)
+    }
+    (jobs.get, exchanges.get)
+  }
+
+  test("plan shape: write and append start no more jobs or write-side shuffles than before") {
+    val out = java.nio.file.Files.createTempDirectory("graft_shape").toString
+    val (writeJobs, writeExchanges) = planShape(HipsPartitioner.write(li.filter(col("k") % 2 === 0),
+      "cra", "cdec", "k", out, "shape", orderK = 4, threshold = 500, marginDeg = 1.0))
+    val (appendJobs, appendExchanges) = planShape(HipsPartitioner.append(li.filter(col("k") % 2 =!= 0),
+      "cra", "cdec", "k", out, "shape"))
+    // ceilings measured on this input before the hive-tree writes were
+    // shared: write 9 jobs / 2 shuffles (one repartition per tree),
+    // append 20 jobs / 6 shuffles (per tree: the repartition, the rank
+    // offsets aggregate and the repartition after the offset join)
+    assert(writeJobs <= 9 && writeExchanges <= 2, s"write: $writeJobs jobs, $writeExchanges shuffles")
+    assert(appendJobs <= 20 && appendExchanges <= 6, s"append: $appendJobs jobs, $appendExchanges shuffles")
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(out))
   }
 
