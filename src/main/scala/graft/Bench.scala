@@ -95,9 +95,13 @@ object Bench {
         // CacheManager, so run k's rebuild of an identical plan would
         // silently read run k-1's cached blocks — the median would
         // measure cached-state READS, not the state build (r16 verdict
-        // item 1). Clear between RUNS (outside the timed region) so
-        // every run computes from parquet, and between queries so
-        // storage pressure can't distort later measurements.
+        // item 1). Clear between RUNS (outside the timed region) so no
+        // run reads a CacheManager-registered persist of an earlier
+        // one, and between queries so those persists cannot add
+        // storage pressure to later measurements. This empties the
+        // CacheManager only: checkpoint and gcPersist blocks live
+        // outside it and are freed by the ContextCleaner after GC
+        // (reuse stays honest, since every run builds new RDDs).
         spark.sharedState.cacheManager.clearCache()
         dt
       }

@@ -1,5 +1,6 @@
 package graft.catalog
 
+import java.util.concurrent.atomic.AtomicReference
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /**
@@ -12,6 +13,19 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
  * gaia.coneSearch(ra = 56, dec = 20, radiusDeg = 10)
  * gaia.crossMatch(sdss, nNeighbors = 4, dthreshDeg = 1.0)
  * }}}
+ *
+ * A handle reads its `meta` once, and resolves each of its two hive
+ * trees (`catalog/`, `neighbor/`) once: the `spark.read.parquet` frame
+ * — file listing and schema — is held with the tree's
+ * [[CatalogFormat.treeVersion]] and reused by [[load]], the three
+ * searches and [[crossMatch]] (which also uses `other`'s trees). No
+ * rows are held. Every use first re-reads the version (one
+ * `getFileStatus` of the tree's `_metadata` sidecar) and resolves the
+ * tree again when it moved, so an append, compaction or repartition
+ * made through another handle or another process is seen by the next
+ * call. A tree without a version (no `_metadata` sidecar) or a catalog
+ * with a pending repartition journal is resolved afresh on every call
+ * and nothing is held.
  */
 final case class Catalog(spark: SparkSession, location: String, catname: String) {
 
@@ -19,6 +33,40 @@ final case class Catalog(spark: SparkSession, location: String, catname: String)
 
   /** The catalog's `{cat}_meta.json`, read once per handle. */
   lazy val meta: CatalogFormat.Meta = CatalogFormat.readMeta(spark, paths)
+
+  /** One hive tree's resolved frame, held with the version it was
+   *  resolved at; thread-safe. */
+  private final class TreeSlot(tree: String) {
+    private val held = new AtomicReference[((Long, Long), DataFrame)]()
+
+    def apply(resolve: => DataFrame): DataFrame = {
+      // the version is read BEFORE resolving: a write landing in
+      // between leaves a newer listing under the older version, which
+      // the next call resolves again — never an older listing held
+      // under a newer version
+      val version =
+        if (HipsCatalog.pendingRepartition(spark, paths)) None
+        else CatalogFormat.treeVersion(spark, paths.tree(tree))
+      val cur = held.get
+      version match {
+        case Some(v) if cur != null && cur._1 == v => cur._2
+        case Some(v) =>
+          val df = resolve
+          held.set((v, df))
+          df
+        case None =>
+          held.set(null)
+          resolve
+      }
+    }
+  }
+
+  private val catalogSlot = new TreeSlot("catalog")
+  private val neighborSlot = new TreeSlot("neighbor")
+
+  private def catalogTree(): DataFrame = catalogSlot(spark.read.parquet(paths.tree("catalog")))
+  private def neighborTree(): DataFrame =
+    neighborSlot(HipsCatalog.readNeighbors(spark, paths, catalogTree()))
 
   def raKw: String = meta.raKw
   def decKw: String = meta.decKw
@@ -64,7 +112,7 @@ final case class Catalog(spark: SparkSession, location: String, catname: String)
 
   /** Load the catalog, optionally column-pruned (ra/dec/id always kept — catalog.py validate_user_input_cols). */
   def load(columns: Seq[String] = Nil): DataFrame = {
-    val df = HipsCatalog.load(spark, location, catname)
+    val df = catalogTree()
     if (columns.isEmpty) df
     else df.select((columns ++ Seq(raKw, decKw, idKw)).distinct.map(org.apache.spark.sql.functions.col): _*)
   }
@@ -78,22 +126,22 @@ final case class Catalog(spark: SparkSession, location: String, catname: String)
    *  `columns` prunes the scan — ra/dec/id always kept. */
   def coneSearch(ra: Double, dec: Double, radiusDeg: Double,
                  columns: Seq[String] = Nil): DataFrame =
-    HipsCatalog.coneSearch(spark, location, catname, raKw, decKw, ra, dec, radiusDeg, orderK,
-      columns = withContractCols(columns))
+    HipsCatalog.coneSearch(catalogTree(), raKw, decKw, ra, dec, radiusDeg, orderK,
+      withContractCols(columns))
 
   /** Box search (wrap-aware ra interval x dec band) with the same
    *  partition pruning and column contract as [[coneSearch]]. */
   def boxSearch(raLo: Double, raHi: Double, decLo: Double, decHi: Double,
                 columns: Seq[String] = Nil): DataFrame =
-    HipsCatalog.boxSearch(spark, location, catname, raKw, decKw, raLo, raHi, decLo, decHi, orderK,
-      columns = withContractCols(columns))
+    HipsCatalog.boxSearch(catalogTree(), raKw, decKw, raLo, raHi, decLo, decHi, orderK,
+      withContractCols(columns))
 
   /** Convex polygon search (gnomonic half-planes) with the same
    *  partition pruning and column contract as [[coneSearch]]. */
   def polygonSearch(vertices: Seq[(Double, Double)],
                     columns: Seq[String] = Nil): DataFrame =
-    HipsCatalog.polygonSearch(spark, location, catname, raKw, decKw, vertices, orderK,
-      columns = withContractCols(columns))
+    HipsCatalog.polygonSearch(catalogTree(), raKw, decKw, vertices, orderK,
+      withContractCols(columns))
 
   /**
    * Compact every partition leaf of the catalog and its margin
@@ -142,8 +190,9 @@ final case class Catalog(spark: SparkSession, location: String, catname: String)
   /** Re-split pixels that outgrew the import threshold through
    *  appends ([[HipsPartitioner.repartition]] — rewrites only the
    *  over-threshold tiles, `_ID`s preserved, margins rebuilt, meta +
-   *  frozen layout basis refreshed). Returns a fresh handle (this
-   *  one's cached meta is stale after the rewrite). */
+   *  frozen layout basis refreshed). Returns a fresh handle; this
+   *  one stays valid too, since its trees revalidate on the next
+   *  call and the meta fields it holds do not change. */
   def repartition(exactMargin: Boolean = false): Catalog = {
     HipsPartitioner.repartition(spark, location, catname, exactMargin)
     Catalog(spark, location, catname)
@@ -162,9 +211,11 @@ final case class Catalog(spark: SparkSession, location: String, catname: String)
                  c1Cols: Seq[String] = Nil, c2Cols: Seq[String] = Nil,
                  delim: String = "."): DataFrame = {
     require(other.catname != catname, "cannot cross-match a catalog with itself")
-    HipsCatalog.crossMatchStored(spark, location, catname, other.catname,
+    val order = math.max(orderK, other.orderK)
+    HipsCatalog.crossMatchStored(catalogTree(), other.catalogTree(), other.neighborTree(),
+      HipsCatalog.partitionGrid(spark, other.location, other.catname, order),
       raKw, decKw, idKw, other.raKw, other.decKw, other.idKw,
-      k = nNeighbors, dthreshDeg = dthreshDeg, orderK = math.max(orderK, other.orderK),
+      k = nNeighbors, dthreshDeg = dthreshDeg, orderK = order,
       rightPrefix = other.catname + delim, leftPrefix = catname + delim,
       leftCols = c1Cols, rightCols = c2Cols)
   }

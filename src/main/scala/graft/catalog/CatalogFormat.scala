@@ -235,9 +235,30 @@ object CatalogFormat {
       .drop("__pix14", "__base")
   }
 
+  /**
+   * The version of one hive tree: `(modificationTime, length)` of its
+   * `_metadata` sidecar, read with one `getFileStatus` through the
+   * Hadoop FileSystem API. It rests on one rule: every tree write
+   * (import, append, compact, repartition commit) ends in
+   * [[treesChanged]], which rewrites the sidecar, so a changed tree
+   * has a changed version. A rewrite of equal length within one
+   * modification-time tick of the store is not told apart. `None`
+   * when the sidecar is missing — no tree, a tree without files, or
+   * a catalog written before sidecars existed: such a tree has no
+   * version, and its readers resolve it afresh every time.
+   */
+  private[catalog] def treeVersion(spark: SparkSession, tree: String): Option[(Long, Long)] = {
+    val sidecar = new Path(tree, "_metadata")
+    try {
+      val st = fs(spark, tree).getFileStatus(sidecar)
+      Some((st.getModificationTime, st.getLen))
+    } catch { case _: java.io.FileNotFoundException => None }
+  }
+
   /** After a write to the hive trees: drop the session's cached
    *  listings of both (a same-session reader would otherwise miss new
-   *  files or read deleted ones) and rewrite their summary sidecars. */
+   *  files or read deleted ones) and rewrite their summary sidecars,
+   *  which also moves each tree's [[treeVersion]]. */
   private[catalog] def treesChanged(spark: SparkSession, paths: Paths): Unit = Trees.foreach { t =>
     spark.catalog.refreshByPath(paths.tree(t))
     writeSummaryFiles(spark, paths.tree(t))
@@ -250,8 +271,9 @@ object CatalogFormat {
    * consumes (lsd2_io.py:324 read_parquet_metadata). Footers are read
    * through parquet-hadoop's pooled parallel reader and merged by its
    * own summary writer, so the sidecar is exactly what a
-   * pyarrow/parquet-mr consumer expects. Graft never reads these
-   * back — see the scale note on [[HipsPartitioner.write]].
+   * pyarrow/parquet-mr consumer expects. Graft never reads their
+   * content back, only `_metadata`'s status ([[treeVersion]]) — see
+   * the scale note on [[HipsPartitioner.write]].
    */
   private def writeSummaryFiles(spark: SparkSession, dir: String): Unit = {
     import scala.jdk.CollectionConverters._

@@ -171,11 +171,13 @@ object HipsPartitioner {
    *
    * Scale note on the sidecars: they serialize every footer through
    * one writer — the reason Spark dropped summary-file support — so
-   * graft itself NEVER reads them (the JSON partition map + hive
-   * layout + footer stats carry the same information); they exist so
-   * a reference-side reader pointed at a graft-written catalog finds
-   * the files it expects. Emission cost is one recursive listing +
-   * a pooled parallel footer read per tree.
+   * graft itself NEVER reads their content (the JSON partition map +
+   * hive layout + footer stats carry the same information); only the
+   * `_metadata` file status is read, as the tree's
+   * [[CatalogFormat.treeVersion]]. They exist so a reference-side
+   * reader pointed at a graft-written catalog finds the files it
+   * expects. Emission cost is one recursive listing + a pooled
+   * parallel footer read per tree.
    */
   def write(df: DataFrame, raCol: String, decCol: String, idCol: String,
             outputDir: String, catname: String,
@@ -609,29 +611,42 @@ object HipsPartitioner {
  */
 object HipsCatalog {
 
-  /** Load the full catalog dataframe (hive partition columns included).
-   *  A lingering repartition journal means a writer crashed mid-commit
+  /** Whether the catalog has a pending repartition journal, warning
+   *  when it has. A lingering journal means a writer crashed mid-commit
    *  (old + new sub-tile dirs may BOTH be visible = duplicate rows) —
    *  warn loudly and point at the repair path rather than silently
    *  double-counting; an ACTIVE repartition's commit window triggers
    *  the same warning, which is the documented transient-duplicates
-   *  read behavior. */
-  def load(spark: SparkSession, outputDir: String, catname: String): DataFrame = {
-    val paths = Paths(outputDir, catname)
+   *  read behavior. [[load]] runs it on every call, and a [[Catalog]]
+   *  handle before every use of a tree it holds. */
+  private[catalog] def pendingRepartition(spark: SparkSession, paths: Paths): Boolean = {
     val jp = paths.journal
-    if (fs(spark, jp).exists(new Path(jp)))
+    val pending = fs(spark, jp).exists(new Path(jp))
+    if (pending)
       org.slf4j.LoggerFactory.getLogger(getClass).warn(
-        s"catalog $catname has a pending repartition commit ($jp): rows in split tiles " +
+        s"catalog ${paths.catname} has a pending repartition commit ($jp): rows in split tiles " +
           "may appear twice until the commit finishes — if no repartition is running, " +
           "a writer crashed; run HipsPartitioner.recoverRepartition to roll it forward")
+    pending
+  }
+
+  /** Load the full catalog dataframe (hive partition columns included),
+   *  listing the tree afresh. */
+  def load(spark: SparkSession, outputDir: String, catname: String): DataFrame = {
+    val paths = Paths(outputDir, catname)
+    pendingRepartition(spark, paths)
     spark.read.parquet(paths.tree("catalog"))
   }
 
   /** Load the neighbor (margin) tree; empty DF with catalog schema if absent. */
-  def loadNeighbors(spark: SparkSession, outputDir: String, catname: String): DataFrame = {
-    val p = Paths(outputDir, catname).tree("neighbor")
-    if (fs(spark, p).exists(new Path(p))) spark.read.parquet(p)
-    else load(spark, outputDir, catname).limit(0)
+  def loadNeighbors(spark: SparkSession, outputDir: String, catname: String): DataFrame =
+    readNeighbors(spark, Paths(outputDir, catname), load(spark, outputDir, catname))
+
+  /** The neighbor tree listed afresh, or `catalog` with no rows when
+   *  the tree does not exist. */
+  private[catalog] def readNeighbors(spark: SparkSession, paths: Paths, catalog: => DataFrame): DataFrame = {
+    val p = paths.tree("neighbor")
+    if (fs(spark, p).exists(new Path(p))) spark.read.parquet(p) else catalog.limit(0)
   }
 
   /**
@@ -660,7 +675,8 @@ object HipsCatalog {
    * No per-row disc cover at query time — that work was done once
    * at write time. Like the reference, matches beyond the stored
    * margin radius are not found: choose marginDeg >= dthresh at
-   * write time for exactness (asserted in ScalaTest).
+   * write time for exactness (asserted in ScalaTest). Every tree is
+   * listed afresh.
    */
   def crossMatchStored(spark: SparkSession, outputDir: String,
                        leftCat: String, rightCat: String,
@@ -668,23 +684,39 @@ object HipsCatalog {
                        rightRa: String, rightDec: String, rightId: String,
                        k: Int, dthreshDeg: Double, orderK: Int,
                        rightPrefix: String = "r_", leftPrefix: String = "",
-                       leftCols: Seq[String] = Nil, rightCols: Seq[String] = Nil): DataFrame = {
+                       leftCols: Seq[String] = Nil, rightCols: Seq[String] = Nil): DataFrame =
+    crossMatchStored(load(spark, outputDir, leftCat),
+      load(spark, outputDir, rightCat), loadNeighbors(spark, outputDir, rightCat),
+      partitionGrid(spark, outputDir, rightCat, orderK),
+      leftRa, leftDec, leftId, rightRa, rightDec, rightId, k, dthreshDeg, orderK,
+      rightPrefix, leftPrefix, leftCols, rightCols)
+
+  /** [[crossMatchStored]] over resolved tree frames: the left
+   *  `catalog/` tree, the right `catalog/` and `neighbor/` trees, and
+   *  the right catalog's partition grid. */
+  private[catalog] def crossMatchStored(left: DataFrame, right: DataFrame, rightNeighbors: DataFrame,
+                                        rightGrid: PartitionGrid,
+                                        leftRa: String, leftDec: String, leftId: String,
+                                        rightRa: String, rightDec: String, rightId: String,
+                                        k: Int, dthreshDeg: Double, orderK: Int,
+                                        rightPrefix: String, leftPrefix: String,
+                                        leftCols: Seq[String], rightCols: Seq[String]): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    import graft.functions.{sphere, PartitionGrid}
+    import graft.functions.sphere
 
     // assign each left row to the RIGHT catalog's partition pixel —
     // codegen kernel over the broadcast grid (was a Scala UDF in r1).
     // The join key is the PACKED (order << 48 | pix) value: a bare
     // pixel number is ambiguous across orders in an adaptive map
     // ((2, 5) and (3, 5) can coexist), packing removes the hazard.
-    val bc = spark.sparkContext.broadcast(partitionGrid(spark, outputDir, rightCat, orderK))
+    val bc = left.sparkSession.sparkContext.broadcast(rightGrid)
     // column selection is applied BEFORE the join, on both stored
     // sides, so the pruning reaches the parquet scans (ReadSchema) —
     // ra/dec/id are always kept (util.py:276 validate_user_input_cols)
     // left hive partition columns (Norder/Dir/Npix) are dropped before
     // prefixing, mirroring prep() on the right — otherwise an unpruned
     // call leaks `{cat}.Norder` etc. asymmetrically into the output
-    val l0 = load(spark, outputDir, leftCat).drop("Norder", "Dir", "Npix")
+    val l0 = left.drop("Norder", "Dir", "Npix")
     val lSel =
       if (leftCols.isEmpty) l0
       else l0.select((leftCols ++ Seq(leftRa, leftDec, leftId)).distinct.map(col): _*)
@@ -703,8 +735,7 @@ object HipsCatalog {
         shiftleft(col("Norder").cast("long"), 48).bitwiseOR(col("Npix")).as("__jpix")): _*)
     }
     // right candidates per pixel: home rows + stored margin replicas
-    val r0 = prep(load(spark, outputDir, rightCat))
-      .unionByName(prep(loadNeighbors(spark, outputDir, rightCat)))
+    val r0 = prep(right).unionByName(prep(rightNeighbors))
     val rp = r0.columns.filterNot(_ == "__jpix").foldLeft(r0)((d, c) => d.withColumnRenamed(c, rightPrefix + c))
 
     // prefixed names may contain '.' (the reference's delim), which
@@ -739,9 +770,8 @@ object HipsCatalog {
    *  InSet per order, all over partition columns, so file-level
    *  pruning still applies. Coarsening only loses selectivity, never
    *  rows. */
-  private def prunedScan(spark: SparkSession, outputDir: String, catname: String,
-                         raDeg: Double, decDeg: Double, radiusDeg: Double, orderK: Int,
-                         columns: Seq[String]): DataFrame = {
+  private def prunedScan(df: DataFrame, raDeg: Double, decDeg: Double, radiusDeg: Double,
+                         orderK: Int, columns: Seq[String]): DataFrame = {
     import org.apache.spark.sql.functions._
     val discFrac = (1 - math.cos(math.toRadians(math.min(radiusDeg, 180.0)))) / 2
     val coverOrder = (0 to orderK).reverse
@@ -755,7 +785,6 @@ object HipsCatalog {
       } else
         col("Norder") === o && shiftright(col("Npix"), 2 * (o - coverOrder)).isin(coverBoxed: _*)
     }.reduce(_ || _)
-    val df = load(spark, outputDir, catname)
     // user column selection BEFORE any predicate so the pruning
     // reaches the parquet scan (caller guarantees ra/dec present;
     // Catalog.* appends ra/dec/id per the reference contract)
@@ -773,40 +802,61 @@ object HipsCatalog {
   /**
    * Cone search with *file-level* pruning: the hive partition filter
    * on (Norder, Npix) restricts the scan to overlapping partitions
-   * before any row is read (catalog.py:65 semantics).
+   * before any row is read (catalog.py:65 semantics). The tree is
+   * listed afresh.
    */
   def coneSearch(spark: SparkSession, outputDir: String, catname: String,
                  raCol: String, decCol: String,
                  raDeg: Double, decDeg: Double, radiusDeg: Double, orderK: Int,
-                 columns: Seq[String] = Nil): DataFrame = {
+                 columns: Seq[String] = Nil): DataFrame =
+    coneSearch(load(spark, outputDir, catname), raCol, decCol, raDeg, decDeg, radiusDeg, orderK, columns)
+
+  /** [[coneSearch]] over a resolved `catalog/` tree frame. */
+  private[catalog] def coneSearch(catalog: DataFrame, raCol: String, decCol: String,
+                                  raDeg: Double, decDeg: Double, radiusDeg: Double, orderK: Int,
+                                  columns: Seq[String]): DataFrame = {
     import org.apache.spark.sql.functions._
-    val filtered = prunedScan(spark, outputDir, catname, raDeg, decDeg, radiusDeg, orderK, columns)
+    val filtered = prunedScan(catalog, raDeg, decDeg, radiusDeg, orderK, columns)
       .withColumn("_DIST", graft.functions.sphere.gcDist(col(raCol), col(decCol), lit(raDeg), lit(decDeg)))
       .filter(col("_DIST") < radiusDeg)
     dropHive(filtered, columns)
   }
 
   /** Stored-path box search: partition pruning via the box's provable
-   *  bounding cone, then the exact wrap-aware range predicate. */
+   *  bounding cone, then the exact wrap-aware range predicate. The
+   *  tree is listed afresh. */
   def boxSearch(spark: SparkSession, outputDir: String, catname: String,
                 raCol: String, decCol: String,
                 raLo: Double, raHi: Double, decLo: Double, decHi: Double, orderK: Int,
-                columns: Seq[String] = Nil): DataFrame = {
+                columns: Seq[String] = Nil): DataFrame =
+    boxSearch(load(spark, outputDir, catname), raCol, decCol, raLo, raHi, decLo, decHi, orderK, columns)
+
+  /** [[boxSearch]] over a resolved `catalog/` tree frame. */
+  private[catalog] def boxSearch(catalog: DataFrame, raCol: String, decCol: String,
+                                 raLo: Double, raHi: Double, decLo: Double, decHi: Double, orderK: Int,
+                                 columns: Seq[String]): DataFrame = {
     val ((cra, cdec), radius) = graft.operators.Spatial.boxBoundingCone(raLo, raHi, decLo, decHi)
     dropHive(graft.operators.Spatial.boxSearch(
-      prunedScan(spark, outputDir, catname, cra, cdec, radius, orderK, columns),
+      prunedScan(catalog, cra, cdec, radius, orderK, columns),
       raCol, decCol, raLo, raHi, decLo, decHi), columns)
   }
 
   /** Stored-path convex polygon search: partition pruning via the
-   *  polygon's bounding cone, then the exact gnomonic half-plane test. */
+   *  polygon's bounding cone, then the exact gnomonic half-plane test.
+   *  The tree is listed afresh. */
   def polygonSearch(spark: SparkSession, outputDir: String, catname: String,
                     raCol: String, decCol: String,
                     vertices: Seq[(Double, Double)], orderK: Int,
-                    columns: Seq[String] = Nil): DataFrame = {
+                    columns: Seq[String] = Nil): DataFrame =
+    polygonSearch(load(spark, outputDir, catname), raCol, decCol, vertices, orderK, columns)
+
+  /** [[polygonSearch]] over a resolved `catalog/` tree frame. */
+  private[catalog] def polygonSearch(catalog: DataFrame, raCol: String, decCol: String,
+                                     vertices: Seq[(Double, Double)], orderK: Int,
+                                     columns: Seq[String]): DataFrame = {
     val ((cra, cdec), radius, inside) =
       graft.operators.Spatial.polygonPredicate(raCol, decCol, vertices)
-    dropHive(prunedScan(spark, outputDir, catname, cra, cdec, radius, orderK, columns)
+    dropHive(prunedScan(catalog, cra, cdec, radius, orderK, columns)
       .filter(inside), columns)
   }
 }

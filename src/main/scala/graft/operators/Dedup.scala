@@ -629,11 +629,14 @@ object Dedup {
     // cost is the minhashPairs convention's leak: the cache lives
     // until the session clears it (one-shot jobs fine; long-lived
     // recurring-ingest callers should use [[incrementalNearDedupWithState]]
-    // against a state THEY persist and release).
+    // against a state THEY persist and release). A call that throws
+    // (the maxBatchRows guard among others) releases the state, so a
+    // refused batch leaves no CacheManager entry behind.
     val st = nearDupState(history, idCol, textCol, numPerms, shingleN)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    incrementalNearDedupWithState(newBatch, st,
+    try incrementalNearDedupWithState(newBatch, st,
       idCol, textCol, minJaccard, numPerms, bands, shingleN, maxBatchRows)
+    catch { case e: Throwable => st.unpersist(); throw e }
   }
 
   /** As [[incrementalNearDedup]] against a PRE-BUILT (and ideally

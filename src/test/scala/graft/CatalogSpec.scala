@@ -903,4 +903,136 @@ class CatalogSpec extends SparkSpecBase {
         s"(extra: ${(stored -- brute).size})")
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(out))
   }
+
+  // ---- per-handle resolved trees: freshness and job count
+
+  /** (rows, id sum) of a frame carrying `k`. */
+  private def countAndSum(df: org.apache.spark.sql.DataFrame): (Long, Long) = {
+    val r = df.agg(count(lit(1)), coalesce(sum(col("k")), lit(0L))).head()
+    (r.getLong(0), r.getLong(1))
+  }
+
+  /** countAndSum of the rows of `truth` within the 30-degree test cone. */
+  private def bruteCone(truth: org.apache.spark.sql.DataFrame): (Long, Long) =
+    countAndSum(truth.filter(sphere.gcDist(col("cra"), col("cdec"), lit(180.0), lit(0.0)) < 30.0))
+
+  test("a handle's held trees follow appends, compaction and repartition made elsewhere") {
+    val out = java.nio.file.Files.createTempDirectory("graft_fresh").toString
+    val part = (0 to 3).map(i => li.filter(col("k") % 4 === i))
+    HipsPartitioner.write(part(0), "cra", "cdec", "k", out, "fresh", orderK = 4, threshold = 200, marginDeg = 1.0)
+    val a = Catalog(spark, out, "fresh")
+    var truth = part(0)
+    def check(cat: Catalog, after: String): Unit = {
+      val got = countAndSum(cat.coneSearch(180.0, 0.0, 30.0))
+      assert(got == bruteCone(truth), s"handle A's cone search after $after")
+    }
+    check(a, "the import")
+    check(a, "the import, warm")
+
+    Catalog(spark, out, "fresh").append(part(1))
+    truth = truth.unionByName(part(1))
+    check(a, "an append through a second handle")
+
+    HipsPartitioner.append(part(2), "cra", "cdec", "k", out, "fresh")
+    truth = truth.unionByName(part(2))
+    check(a, "HipsPartitioner.append")
+
+    // the held listing names files compaction deletes: a stale frame
+    // would fail with FileNotFoundException here
+    assert(Catalog(spark, out, "fresh").compact()._1 > 0, "the appends must leave leaves to compact")
+    check(a, "compact() on another handle")
+    assert(a.load().count() == truth.count())
+
+    // repartition rewrites split tiles into new dirs and deletes the
+    // old ones; it runs on a catalog of its own, since a tree write
+    // after compaction fails its sidecar merge (compacted files carry
+    // a nullable `_ID`)
+    HipsPartitioner.write(part(0), "cra", "cdec", "k", out, "grown", orderK = 4, threshold = 200, marginDeg = 1.0)
+    val g = Catalog(spark, out, "grown")
+    truth = part(0)
+    check(g, "the import")
+    HipsPartitioner.append(li.filter(col("k") % 4 =!= 0), "cra", "cdec", "k", out, "grown")
+    truth = li
+    check(g, "an append")
+    val tilesBefore = HipsCatalog.partitionGrid(spark, out, "grown", 4).nTiles
+    Catalog(spark, out, "grown").repartition()
+    assert(HipsCatalog.partitionGrid(spark, out, "grown", 4).nTiles > tilesBefore,
+      "4x growth past the threshold must split tiles")
+    check(g, "repartition() on another handle")
+
+    // cross-match: the left handle's tree and the right handle's
+    // catalog + neighbor trees all follow an append made elsewhere;
+    // the left catalog lives under another location, so the right
+    // trees must be read from the right handle's own location
+    val elsewhere = java.nio.file.Files.createTempDirectory("graft_fresh_q").toString
+    val cust = spark.read.parquet(sf("sf0.001") + "/customer.parquet")
+      .withColumn("cra", sphere.raOf(col("c_custkey"))).withColumn("cdec", sphere.decOf(col("c_custkey")))
+    HipsPartitioner.write(cust, "cra", "cdec", "c_custkey", elsewhere, "q", orderK = 4, threshold = 500, marginDeg = 1.0)
+    val q = Catalog(spark, elsewhere, "q")
+    def stored() = q.crossMatch(g, nNeighbors = 2, dthreshDeg = 0.8)
+      .select(col("`q.c_custkey`"), col("`grown.k`"), col("_RANK")).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).sorted.toSeq
+    def inflight() = graft.operators.Spatial.crossMatchKnn(cust, truth, "cra", "cdec", "c_custkey",
+        "cra", "cdec", "k", k = 2, dthreshDeg = 0.8, leftPrefix = "", rightPrefix = "r_")
+      .select(col("c_custkey"), col("r_k"), col("_RANK")).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).sorted.toSeq
+    assert(stored() == inflight())
+    val extra = li.filter(col("k") % 7 === 0)
+    Catalog(spark, out, "grown").append(extra)
+    truth = truth.unionByName(extra)
+    val xm = stored()
+    assert(xm == inflight() && xm.nonEmpty, "cross-match after an append through another handle")
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(out))
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(elsewhere))
+  }
+
+  test("a catalog without _metadata sidecars is read afresh on every call and stays correct") {
+    val out = java.nio.file.Files.createTempDirectory("graft_nosidecar").toString
+    def dropSidecars(): Unit = Seq("catalog", "neighbor").foreach { t =>
+      Seq("_metadata", "_common_metadata").foreach(f => new java.io.File(s"$out/old/$t/$f").delete())
+    }
+    val first = li.filter(col("k") % 2 === 0)
+    HipsPartitioner.write(first, "cra", "cdec", "k", out, "old", orderK = 4, threshold = 500, marginDeg = 1.0)
+    dropSidecars()
+    val a = Catalog(spark, out, "old")
+    assert(countAndSum(a.coneSearch(180.0, 0.0, 30.0)) == bruteCone(first))
+    // the append writes sidecars again; without them the tree has no
+    // version, so a handle that held its first listing would miss rows
+    HipsPartitioner.append(li.filter(col("k") % 2 =!= 0), "cra", "cdec", "k", out, "old")
+    dropSidecars()
+    assert(countAndSum(a.coneSearch(180.0, 0.0, 30.0)) == bruteCone(li))
+    assert(countAndSum(a.boxSearch(150.0, 210.0, -20.0, 20.0)) == countAndSum(
+      li.filter(col("cra") >= 150.0 && col("cra") <= 210.0 && col("cdec") >= -20.0 && col("cdec") <= 20.0)))
+    assert(a.load().count() == li.count())
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(out))
+  }
+
+  test("a warm handle starts no Spark job before a search's or a cross-match's action") {
+    val out = java.nio.file.Files.createTempDirectory("graft_warmjobs").toString
+    // order-2 tiles (threshold 50): far more than the 32 Npix dirs
+    // under one Dir above which Spark lists a tree in a parallel job
+    HipsPartitioner.write(li.filter(col("k") % 2 === 0), "cra", "cdec", "k", out, "wl",
+      orderK = 3, threshold = 50, marginDeg = 1.0)
+    HipsPartitioner.write(li.filter(col("k") % 2 =!= 0), "cra", "cdec", "k", out, "wr",
+      orderK = 3, threshold = 50, marginDeg = 1.0)
+    val (l, r) = (Catalog(spark, out, "wl"), Catalog(spark, out, "wr"))
+    def cone() = l.coneSearch(180.0, 0.0, 30.0)
+    def xmatch() = l.crossMatch(r, nNeighbors = 1, dthreshDeg = 0.5)
+    def act(df: org.apache.spark.sql.DataFrame): Unit = df.agg(count(lit(1))).head()
+    act(cone()); act(xmatch())
+    var (coneDf, xmatchDf) = (cone(), xmatch())
+    val coneOpen = planShape { coneDf = cone() }._1
+    val coneAction = planShape(act(coneDf))._1
+    val xmatchOpen = planShape { xmatchDf = xmatch() }._1
+    val xmatchAction = planShape(act(xmatchDf))._1
+    // measured on this input when every call listed its trees afresh:
+    // the cone search started 2 jobs before its action and 2 in it; the
+    // cross-match 6 before (it listed the left catalog, right catalog
+    // and right neighbor trees) and 4 in it
+    assert(coneOpen == 0 && xmatchOpen == 0,
+      s"jobs before the action: cone search $coneOpen, cross-match $xmatchOpen")
+    assert(coneAction <= 2 && xmatchAction <= 4,
+      s"jobs in the action: cone search $coneAction, cross-match $xmatchAction")
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(out))
+  }
 }

@@ -38,12 +38,30 @@ class GraftFsTestFileSystem extends org.apache.hadoop.fs.FileSystem {
     local.append(toLocal(f), bufferSize, progress)
   override def rename(src: Path, dst: Path): Boolean = local.rename(toLocal(src), toLocal(dst))
   override def delete(f: Path, recursive: Boolean): Boolean = local.delete(toLocal(f), recursive)
-  override def listStatus(f: Path): Array[FileStatus] = local.listStatus(toLocal(f)).map(fromLocal)
+  override def listStatus(f: Path): Array[FileStatus] = {
+    GraftFsTestFileSystem.bump(GraftFsTestFileSystem.listed, f)
+    local.listStatus(toLocal(f)).map(fromLocal)
+  }
   override def setWorkingDirectory(dir: Path): Unit = local.setWorkingDirectory(toLocal(dir))
   override def getWorkingDirectory: Path = new Path("graftfs:///tmp")
   override def mkdirs(f: Path, permission: org.apache.hadoop.fs.permission.FsPermission): Boolean =
     local.mkdirs(toLocal(f), permission)
-  override def getFileStatus(f: Path): FileStatus = fromLocal(local.getFileStatus(toLocal(f)))
+  override def getFileStatus(f: Path): FileStatus = {
+    GraftFsTestFileSystem.bump(GraftFsTestFileSystem.statted, f)
+    fromLocal(local.getFileStatus(toLocal(f)))
+  }
+}
+
+/** Calls per path (the URI path, no scheme), across all instances. */
+object GraftFsTestFileSystem {
+  import java.util.concurrent.ConcurrentHashMap
+  import java.util.concurrent.atomic.AtomicInteger
+  type Calls = ConcurrentHashMap[String, AtomicInteger]
+  val listed: Calls = new ConcurrentHashMap()
+  val statted: Calls = new ConcurrentHashMap()
+  def bump(calls: Calls, f: org.apache.hadoop.fs.Path): Unit =
+    calls.computeIfAbsent(f.toUri.getPath.stripSuffix("/"), _ => new AtomicInteger).incrementAndGet()
+  def count(calls: Calls, path: String): Int = Option(calls.get(path)).map(_.get).getOrElse(0)
 }
 
 /** The reference reads catalogs off cloud object stores by threading
@@ -90,6 +108,38 @@ class CloudFsSpec extends SparkSpecBase {
       .filter(col("d") < 30.0).select("k").collect().map(_.getLong(0)).sorted
     assert(cone.nonEmpty && cone.toSeq == brute.toSeq,
       s"cone through graftfs:// must match brute force (${cone.length} vs ${brute.length})")
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp))
+  }
+
+  test("a graftfs:// handle checks its tree version through the Hadoop FS API and lists the tree once per version") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft_cloudfs_held").toString
+    val loc = s"graftfs://$tmp"
+    val cat = Catalog.open(spark, loc, "held",
+      Map("fs.graftfs.impl" -> classOf[GraftFsTestFileSystem].getName))
+    val df = pts
+    Catalog.importFrom(df.filter(col("k") % 2 === 0), loc, "held", "cra", "cdec", "k",
+      orderK = 4, threshold = 500, marginDeg = 1.0)
+    val (tree, sidecar) = (s"$tmp/held/catalog", s"$tmp/held/catalog/_metadata")
+    import GraftFsTestFileSystem.{count, listed, statted}
+    def coneCount(): Long = cat.coneSearch(ra = 180.0, dec = 0.0, radiusDeg = 30.0).count()
+    def brute(rows: org.apache.spark.sql.DataFrame): Long =
+      rows.filter(sphere.gcDist(col("cra"), col("cdec"), lit(180.0), lit(0.0)) < 30.0).count()
+    /** (sidecar getFileStatus calls, tree root listings) made by `body`. */
+    def calls(body: => Unit): (Int, Int) = {
+      val (s0, l0) = (count(statted, sidecar), count(listed, tree))
+      body
+      (count(statted, sidecar) - s0, count(listed, tree) - l0)
+    }
+
+    val first = calls(assert(coneCount() == brute(df.filter(col("k") % 2 === 0))))
+    assert(first._1 >= 1 && first._2 >= 1, s"first search: (version checks, listings) = $first")
+    val second = calls(assert(coneCount() == brute(df.filter(col("k") % 2 === 0))))
+    assert(second._1 >= 1 && second._2 == 0,
+      s"a warm search checks the version but does not list the tree again: $second")
+
+    Catalog(spark, loc, "held").append(df.filter(col("k") % 2 =!= 0))
+    val third = calls(assert(coneCount() == brute(df), "a search after the append sees every row"))
+    assert(third._1 >= 1 && third._2 >= 1, s"after the append the tree is listed again: $third")
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp))
   }
 }

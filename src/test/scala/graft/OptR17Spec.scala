@@ -61,6 +61,17 @@ class OptR17Spec extends SparkSpecBase {
     assert(kept.count() == 10L, "non-duplicate batch survives under the bound")
   }
 
+  test("incrementalNearDedup leaves no CacheManager entry behind when it refuses a batch") {
+    val history = Seq((1L, "alpha beta gamma delta epsilon")).toDF("doc_id", "text")
+    val batch = (10L to 19L).map(i => (i, s"doc number $i words here")).toDF("doc_id", "text")
+    spark.sharedState.cacheManager.clearCache()
+    intercept[IllegalArgumentException] {
+      Dedup.incrementalNearDedup(batch, history, "doc_id", "text", maxBatchRows = 5L)
+    }
+    assert(spark.sharedState.cacheManager.isEmpty,
+      "the history state persisted before the guard must be released when the guard throws")
+  }
+
   // ------------------------------- basketPairs fused guard job
 
   test("basketPairs: fused guard still enforces the hot-basket bound and lift uses the exact basket count") {
